@@ -15,7 +15,8 @@ Recognized layout::
     id = mypipeline          ; optional, recorded nowhere (daemon name)
     out = /data/out          ; output root (CLI --out overrides)
     deadletter = deadletter  ; optional sink rename
-    route_mode = multi       ; multi | single_pass
+    route_mode = multi       ; multi | single_pass (single_pass: one
+                             ; parquet table, no hourly aggregate)
     version = 1
 
     [pages_in]

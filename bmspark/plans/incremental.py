@@ -23,14 +23,16 @@ files happens driver-side on file PATHS (bounded: ~10^7 entries at the
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import json
 import os
 import time
+from dataclasses import replace
 
 from pyspark.sql import SparkSession
 
-from bmspark.functions import parse as parse_fns
-from bmspark.plans.spec import PipelineSpec, PipelineResult, run_pipeline
+from bmspark.plans.spec import PipelineResult, PipelineSpec, run_pipeline, sink_path
 
 STATE_FILE = "_incremental_state.json"
 
@@ -84,21 +86,9 @@ def incremental_run(
     # the retry would skip them (built from fewer files) while rewriting
     # the rest from the larger set, silently losing the late files' rows
     # from the skipped sinks.
-    import hashlib
-
-    tick_spec = PipelineSpec(
-        source_path=spec.source_path,
+    tick_spec = replace(
+        spec,
         out_dir=f"{spec.out_dir}/ticks/{tick:06d}",
-        routes=spec.routes,
-        subscription=spec.subscription,
-        deadletter=spec.deadletter,
-        enrich_lang_dim=spec.enrich_lang_dim,
-        aggregate_name=spec.aggregate_name,
-        partition_cols=spec.partition_cols,
-        sink_columns=spec.sink_columns,
-        parallel_sinks=spec.parallel_sinks,
-        route_mode=spec.route_mode,
-        version=spec.version,
         input_manifest=hashlib.sha256("\n".join(new).encode()).hexdigest()[:16],
     )
     new_pages = spark.read.parquet(*new)
@@ -117,12 +107,10 @@ def incremental_run(
 
 
 def read_sink_union(spark: SparkSession, spec: PipelineSpec, sink: str):
-    """All ticks of one sink as a single DataFrame."""
-    import glob
-
-    paths = sorted(glob.glob(f"{spec.out_dir}/ticks/*/{sink}"))
-    if spec.route_mode == "single_pass":
-        paths = sorted(glob.glob(f"{spec.out_dir}/ticks/*/routed/__sink={sink}"))
+    """All ticks of one sink as a single DataFrame (None before the
+    first tick) — incremental ticks and streaming micro-batches share
+    the ``out_dir/ticks/<n>`` layout."""
+    paths = sorted(glob.glob(sink_path(replace(spec, out_dir=f"{spec.out_dir}/ticks/*"), sink)))
     # one read per tick dir: each is its own hive-partitioned root, so a
     # combined read would trip partition discovery (conflicting bases)
     out = None

@@ -8,7 +8,8 @@ Per tick:
   1. list source data files, subtract the state manifest (same file-CDC
      mechanism as plans/incremental.py);
   2. fingerprint the new docs (functions/text.fingerprint — md5 of
-     normalized text, the repo's exact-dedup content hash);
+     normalized text, the repo's exact-dedup content hash; NULL text
+     gets the fixed NULL_TEXT_FP);
   3. within-tick dedup: keep the min id per fingerprint;
   4. cross-tick dedup: LEFT ANTI join against the fingerprints of every
      previously committed tick — read COLUMN-PRUNED from the prior tick
@@ -47,6 +48,11 @@ STATE_FILE = "_dedup_state.json"
 #: separate manifest name for the SPAN-granularity pipeline so both
 #: pipelines may share one out_dir without clobbering each other
 SPAN_STATE_FILE = "_span_dedup_state.json"
+#: dedup_tick's fingerprint for NULL text. md5(NULL) is NULL, and NULL
+#: never equals NULL in the cross-tick anti-join, so every tick would
+#: re-emit one NULL-text doc; a fixed non-hex value cannot collide with
+#: an md5 and keeps the state join a plain equi-join on fp.
+NULL_TEXT_FP = "null-text"
 
 
 def read_state(out_dir: str, state_file: str = STATE_FILE) -> dict:
@@ -182,7 +188,7 @@ def dedup_tick(
 
     tick = len(state["runs"])
     docs = spark.read.parquet(*new).withColumn(
-        "fp", text.fingerprint(text_col)
+        "fp", F.coalesce(text.fingerprint(text_col), F.lit(NULL_TEXT_FP))
     )
     # within-tick: keep exactly ONE row per fingerprint — the min-id row,
     # positionally via row_number (a (fp, min_id) semi-join would pass

@@ -7,10 +7,16 @@ keeps that shape: a PipelineSpec (plain dict / dataclass, loadable from
 JSON) declares source → parse → enrich → route → aggregate, and
 ``run_pipeline`` compiles it into ONE DataFrame DAG:
 
-    scan → parse_full (Arrow UDF) → broadcast-enrich → persist()
-        → N conditional sink writes (+ deadletter)        [router]
+    scan → parse_full (Arrow UDF) → broadcast-enrich
+        → every sink whose predicate holds (+ deadletter)  [router]
         → hourly counter aggregate write                   [metrics]
-        → per-sink lineage manifests                       [metamonitor]
+        → lineage manifests                                [metamonitor]
+
+``run_pipeline`` is the package's only router: batch runs, incremental
+ticks, streaming micro-batches and deadletter replay all go through it.
+Like the reference's broadcast bus, where every output stage filters the
+same stream, a row lands in EVERY sink whose predicate holds; rows that
+fail to parse or match no sink land in the deadletter.
 
 Resume: sinks whose ``_lineage.json`` matches the spec fingerprint are
 skipped (SURVEY.md T6); the run is idempotent and crash-resumable.
@@ -21,11 +27,14 @@ from __future__ import annotations
 import hashlib
 import json
 import time
-from dataclasses import asdict, dataclass, field
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import asdict, dataclass, field, replace
+from functools import reduce
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+from pyspark.util import inheritable_thread_target
 
 from bmspark.functions import parse as parse_fns
 from bmspark.operators import aggregate as agg_ops
@@ -35,13 +44,14 @@ from bmspark.plans import lineage
 @dataclass
 class RouteRule:
     """One output stage: rows where ``predicate`` (SQL expr over enriched
-    columns) is true go to sink ``name`` at ``{out_dir}/{name}``.
+    columns) is true go to sink ``name`` (at ``sink_path(spec, name)``),
+    whatever other sinks they also go to.
 
     ``fmt`` is the sink's output encoding — the graft of the reference's
     per-output codec (each output stage declares its wire format and the
     router re-encodes per sink; codec dispatch in the output path,
-    upstream). parquet | json | csv. Only honored in multi-action route
-    mode (single_pass requires a shared format by construction)."""
+    upstream). parquet | json | csv. Only multi route mode honours it;
+    single_pass writes one parquet table and rejects any other fmt."""
 
     name: str
     predicate: str
@@ -75,18 +85,18 @@ class PipelineSpec:
         "extracted_text", "text_sha", "n_links", "n_bytes",
         "n_tokens", "simhash",
     )
-    #: write all sinks concurrently from driver threads: tasks interleave
-    #: on the same executors, per-sink driver latency and commit I/O
-    #: overlap. The Go reference does exactly this with per-output
-    #: goroutines (pipeline.go upstream).
-    parallel_sinks: bool = True
-    #: "multi": one write action per sink (per-sink schema/layout — raw
-    #: html only in deadletter; the default, matches reference semantics
-    #: of independent output stages). "single_pass": route label becomes
-    #: a dynamic partition column and the WHOLE fan-out is one write job
-    #: — no persist, no per-sink passes; the cheapest correct fan-out
-    #: when sinks share a format (sink tables live at
-    #: out_dir/routed/__sink=<name>).
+    #: Both modes route a row to every sink whose predicate holds.
+    #: "multi" (default): persist, then one write action per sink, all
+    #: run concurrently from driver threads like the reference's
+    #: per-output goroutines (pipeline.go upstream); each sink is its own
+    #: table at out_dir/<name> in its own fmt, the deadletter keeps every
+    #: column incl. raw html, and the hourly aggregate is written.
+    #: "single_pass": each row's matched sink labels are exploded into a
+    #: dynamic partition column and the WHOLE fan-out is one write job —
+    #: no persist, no per-sink passes. Sink tables live at
+    #: out_dir/routed/__sink=<name>, all parquet (other fmts are
+    #: rejected), raw html kept on deadletter rows only, and NO hourly
+    #: aggregate is written.
     route_mode: str = "multi"
     version: int = 1
     #: hash of the exact input file set this spec was planned against
@@ -118,7 +128,7 @@ def build_enriched(
     parse_udf=None,
 ) -> DataFrame:
     """The shared upstream subplan: scan → parse → enrich. Returned
-    un-persisted; run_pipeline persists before fan-out."""
+    un-persisted; the multi route mode persists it before fan-out."""
     from bmspark import fixtures
 
     df = pages if pages is not None else spark.read.parquet(spec.source_path)
@@ -148,6 +158,47 @@ def build_enriched(
     return flat
 
 
+def sink_path(spec: PipelineSpec, name: str) -> str:
+    """Where sink ``name`` of ``spec`` lands: its own table in multi
+    mode, one ``__sink`` partition of the routed table in single_pass."""
+    if spec.route_mode == "single_pass":
+        return f"{spec.out_dir}/routed/__sink={name}"
+    return f"{spec.out_dir}/{name}"
+
+
+@dataclass
+class _Routes:
+    """The route table compiled once against the enriched schema."""
+
+    #: (sink name, predicate) — NULL-safe and true only on parsed rows
+    sinks: list[tuple[str, Column]]
+    #: true on the rows no sink takes (parse failures included)
+    deadletter: Column
+    #: the decoded projection conditional sinks receive
+    columns: list[str]
+
+
+def _compile_routes(spec: PipelineSpec, enriched: DataFrame) -> _Routes:
+    parsed = F.coalesce(F.col("parse_ok"), F.lit(False))
+    sinks = []
+    for rule in spec.routes:
+        # fail fast: resolve the predicate against the enriched schema
+        # BEFORE any action — a typo'd predicate must not cost a full
+        # parse pass (observed: OOM-then-AnalysisException at 400k rows
+        # when validation ran after materialization)
+        enriched.filter(F.expr(rule.predicate))
+        # NULL-safe: `lang = 'en'` is NULL for NULL lang; unwrapped, such
+        # a row would match no sink AND fail the "matched none" test, and
+        # vanish — coalesce(pred, false) sends it to the deadletter
+        sinks.append((rule.name, parsed & F.coalesce(F.expr(rule.predicate), F.lit(False))))
+    matched_any = reduce(lambda a, b: a | b, (p for _, p in sinks), F.lit(False))
+    columns = [
+        c for c in (*spec.sink_columns, "lang_name", "lang_family")
+        if c in enriched.columns
+    ]
+    return _Routes(sinks=sinks, deadletter=~matched_any, columns=columns)
+
+
 def run_pipeline(
     spark: SparkSession,
     spec: PipelineSpec,
@@ -155,27 +206,43 @@ def run_pipeline(
     parse_udf=None,
 ) -> PipelineResult:
     """Compile + execute the spec. Returns exact per-sink counts (taken by
-    Observation inside each write — the metamonitor analog) and writes one
-    lineage manifest per sink."""
-    if spec.route_mode == "single_pass":
-        return _run_single_pass(spark, spec, pages=pages, parse_udf=parse_udf)
+    Observation inside the writes — the metamonitor analog) and writes
+    lineage manifests."""
+    single_pass = spec.route_mode == "single_pass"
+    if single_pass:
+        other = [r.name for r in spec.routes if r.fmt != "parquet"]
+        if other:
+            raise ValueError(
+                f"route_mode='single_pass' writes one parquet table; "
+                f"routes {other} ask for another fmt (use route_mode='multi')"
+            )
     t0 = time.monotonic()
-    fp = spec.fingerprint()
-    enriched = build_enriched(spark, spec, pages=pages, parse_udf=parse_udf).persist(
-        StorageLevel.MEMORY_AND_DISK
+    enriched = build_enriched(spark, spec, pages=pages, parse_udf=parse_udf)
+    routes = _compile_routes(spec, enriched)
+    if single_pass:
+        counts, skipped, input_count = _write_single_pass(spec, enriched, routes)
+    else:
+        counts, skipped, input_count = _write_multi(spark, spec, enriched, routes, pages)
+    paths = {name: sink_path(spec, name) for name in counts}
+    if single_pass:
+        paths["routed"] = f"{spec.out_dir}/routed"
+    wall = time.monotonic() - t0
+    return PipelineResult(
+        counts=counts,
+        skipped=skipped,
+        input_count=input_count,
+        wall_secs=wall,
+        docs_per_sec=input_count / wall if wall > 0 else 0.0,
+        paths=paths,
     )
+
+
+def _write_multi(spark, spec, enriched, routes, pages):
+    """Persist, then one write per sink, concurrently; the hourly
+    aggregate after. Returns (counts, skipped, input_count)."""
+    fp = spec.fingerprint()
+    enriched = enriched.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        counts: dict[str, int] = {}
-        paths: dict[str, str] = {}
-        skipped: list[str] = []
-
-        # fail fast: resolve every route predicate against the enriched
-        # schema BEFORE any action — a typo'd predicate must not cost a
-        # full parse pass (observed: OOM-then-AnalysisException at 400k
-        # rows when validation ran after materialization)
-        for rule in spec.routes:
-            enriched.filter(F.expr(rule.predicate))
-
         input_obs = Observation("input")
         enriched.observe(input_obs, F.count(F.lit(1)).alias("n")).write.format(
             "noop"
@@ -192,32 +259,16 @@ def run_pipeline(
         except Exception:
             source_files = []  # inline DataFrame with no file source
 
-        # NULL-safe routing: a predicate like `lang = 'en'` evaluates NULL
-        # for NULL lang; unwrapped, such rows match neither any sink
-        # (~dl_pred & NULL is non-true) nor the deadletter (dl_pred | ~NULL
-        # is non-true) and silently vanish — violating routed-row equality.
-        # coalesce(pred, false) makes NULL-predicate rows fall through to
-        # the deadletter, same as single_pass mode's .otherwise().
-        dl_pred = ~F.coalesce(F.col("parse_ok"), F.lit(False))
-        matched_any = F.lit(False)
-        sink_cols = [c for c in spec.sink_columns if c in enriched.columns]
-        extra_dims = [c for c in ("lang_name", "lang_family") if c in enriched.columns]
-        branches: list[tuple[str, DataFrame]] = []
-        for rule in spec.routes:
-            pred = F.coalesce(F.expr(rule.predicate), F.lit(False))
-            branches.append(
-                (rule.name, enriched.filter(~dl_pred & pred).select(*sink_cols, *extra_dims))
-            )
-            matched_any = matched_any | pred
+        branches = [
+            (name, enriched.filter(pred).select(*routes.columns))
+            for name, pred in routes.sinks
+        ]
         # deadletter keeps the raw payload (html) for reprocessing
-        branches.append(
-            (spec.deadletter, enriched.filter(dl_pred | ~matched_any))
-        )
-
+        branches.append((spec.deadletter, enriched.filter(routes.deadletter)))
         fmts = {rule.name: rule.fmt for rule in spec.routes}
 
         def write_sink(name: str, branch: DataFrame) -> tuple[str, int, bool]:
-            path = f"{spec.out_dir}/{name}"
+            path = sink_path(spec, name)
             if lineage.is_committed(path, fp):
                 return name, lineage.read_manifest(path)["row_count"], True
             obs = Observation(f"sink_{name}_{fp}")
@@ -242,23 +293,19 @@ def run_pipeline(
             )
             return name, n, False
 
-        for name, _ in branches:
-            paths[name] = f"{spec.out_dir}/{name}"
-        if spec.parallel_sinks and len(branches) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=len(branches)) as pool:
-                results = list(pool.map(lambda nb: write_sink(*nb), branches))
-        else:
-            results = [write_sink(n, b) for n, b in branches]
-        for name, n, was_skipped in results:
-            counts[name] = n
-            if was_skipped:
-                skipped.append(name)
+        # the write threads carry the caller's job group and local
+        # properties (one copy each: a write sets its own execution id)
+        with ThreadPoolExecutor(max_workers=len(branches)) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(spark)(write_sink), *nb)
+                for nb in branches
+            ]
+            results = [f.result() for f in futures]
+        counts = {name: n for name, n, _ in results}
+        skipped = [name for name, _, was_skipped in results if was_skipped]
 
         # metrics stage: hourly counters (metrics.go analog)
-        agg_path = f"{spec.out_dir}/{spec.aggregate_name}"
-        paths[spec.aggregate_name] = agg_path
+        agg_path = sink_path(spec, spec.aggregate_name)
         if lineage.is_committed(agg_path, fp):
             skipped.append(spec.aggregate_name)
             counts[spec.aggregate_name] = lineage.read_manifest(agg_path)["row_count"]
@@ -279,127 +326,75 @@ def run_pipeline(
                 agg_path, sink=spec.aggregate_name, row_count=counts[spec.aggregate_name],
                 plan_fingerprint=fp,
             )
-
-        wall = time.monotonic() - t0
-        return PipelineResult(
-            counts=counts,
-            skipped=skipped,
-            input_count=input_count,
-            wall_secs=wall,
-            docs_per_sec=input_count / wall if wall > 0 else 0.0,
-            paths=paths,
-        )
+        return counts, skipped, input_count
     finally:
         enriched.unpersist()
 
 
-def _run_single_pass(
-    spark: SparkSession,
-    spec: PipelineSpec,
-    pages: DataFrame | None = None,
-    parse_udf=None,
-) -> PipelineResult:
-    """Single-pass fan-out: scan → parse → enrich → ONE partitioned write
-    with the route label as a dynamic partition column, counters riding
-    the same pass via Observation. No cache, no per-sink jobs — at 10^12
-    docs this halves cluster time vs the multi-action router whenever all
-    sinks share a format. Raw html is retained only on deadletter rows
-    (nulled elsewhere; nulls cost nothing in parquet)."""
-    t0 = time.monotonic()
+def _write_single_pass(spec, enriched, routes):
+    """The whole fan-out as ONE partitioned write: each row's matched sink
+    labels (the deadletter label when none match) are exploded into the
+    ``__sink`` partition column, and the counters ride the same pass via
+    Observation. No cache, no per-sink jobs — at 10^12 docs this halves
+    cluster time vs the multi-action router. Raw html is retained only on
+    deadletter rows (nulled elsewhere; nulls cost nothing in parquet).
+    Returns (counts, skipped, input_count)."""
     fp = spec.fingerprint()
-    enriched = build_enriched(spark, spec, pages=pages, parse_udf=parse_udf)
-
-    # single_pass is NULL-safe by construction: a NULL predicate is
-    # non-true in when(), so the row falls through to .otherwise(deadletter)
-    dl_pred = ~F.coalesce(F.col("parse_ok"), F.lit(False))
-    label = None
-    for rule in spec.routes:
-        pred = F.expr(rule.predicate)
-        branch_label = F.when(~dl_pred & pred, F.lit(rule.name))
-        label = branch_label if label is None else label.when(~dl_pred & pred, F.lit(rule.name))
-    label = (label if label is not None else F.when(F.lit(False), F.lit(""))).otherwise(
-        F.lit(spec.deadletter)
-    )
-
-    sink_cols = [c for c in spec.sink_columns if c in enriched.columns]
-    extra = [c for c in ("lang_name", "lang_family") if c in enriched.columns]
-    routed = enriched.withColumn("__sink", label).select(
-        "__sink",
-        *sink_cols,
-        *extra,
-        F.when(F.col("__sink") == spec.deadletter, F.col("html")).alias("html"),
-    )
-
     routed_path = f"{spec.out_dir}/routed"
     if lineage.is_committed(routed_path, fp):
-        m = lineage.read_manifest(routed_path)
-        return PipelineResult(
-            counts=m["metrics"]["sink_counts"],
-            skipped=["routed"],
-            input_count=m["metrics"]["input_count"],
-            wall_secs=time.monotonic() - t0,
-            docs_per_sec=0.0,
-            paths={"routed": routed_path},
-        )
+        m = lineage.read_manifest(routed_path)["metrics"]
+        return m["sink_counts"], ["routed"], m["input_count"]
 
-    obs = Observation(f"route_{fp}_{time.monotonic_ns()}")
-    aggs = [F.count(F.lit(1)).alias("__input")] + [
-        F.sum(F.when(F.col("__sink") == name, 1).otherwise(0)).alias(name)
-        for name in [r.name for r in spec.routes] + [spec.deadletter]
-    ]
+    names = [name for name, _ in routes.sinks] + [spec.deadletter]
+    labels = F.array_compact(F.array(
+        *[F.when(pred, F.lit(name)) for name, pred in routes.sinks],
+        F.when(routes.deadletter, F.lit(spec.deadletter)),
+    ))
+    tag = f"{fp}_{time.monotonic_ns()}"
+    input_obs, sink_obs = Observation(f"input_{tag}"), Observation(f"route_{tag}")
+    routed = (
+        enriched.observe(input_obs, F.count(F.lit(1)).alias("n"))
+        .select(F.explode(labels).alias("__sink"), *routes.columns, "html")
+        .withColumn("html", F.when(F.col("__sink") == spec.deadletter, F.col("html")))
+    )
     (
-        routed.observe(obs, *aggs)
+        routed.observe(sink_obs, *[
+            F.sum(F.when(F.col("__sink") == name, 1).otherwise(0)).alias(name)
+            for name in names
+        ])
         .write.mode("overwrite")
         .partitionBy("__sink", *spec.partition_cols)
         .parquet(routed_path)
     )
-    got = obs.get
-    counts = {
-        name: int(got[name] or 0)
-        for name in [r.name for r in spec.routes] + [spec.deadletter]
-    }
-    input_count = got["__input"]
+    got = sink_obs.get
+    counts = {name: int(got[name] or 0) for name in names}
+    input_count = input_obs.get["n"]
     lineage.commit_manifest(
         routed_path,
         sink="routed",
-        row_count=input_count,
+        row_count=sum(counts.values()),
         plan_fingerprint=fp,
         partitions=lineage.output_lineage(routed_path),
         metrics={"input_count": input_count, "sink_counts": counts},
     )
-    wall = time.monotonic() - t0
-    return PipelineResult(
-        counts=counts,
-        skipped=[],
-        input_count=input_count,
-        wall_secs=wall,
-        docs_per_sec=input_count / wall if wall else 0.0,
-        paths={"routed": routed_path,
-               **{r.name: f"{routed_path}/__sink={r.name}" for r in spec.routes},
-               spec.deadletter: f"{routed_path}/__sink={spec.deadletter}"},
-    )
+    return counts, [], input_count
 
 
 def reprocess_deadletter(spark: SparkSession, spec: PipelineSpec) -> PipelineResult:
     """Replay the deadletter archive through the salvage decoder — the
     reference's recover-by-replay pattern (replay.go: re-ingest a tap
     archive after fixing the pipeline). Rows that the lenient parse can
-    now decode are routed into ``{out_dir}/reprocessed/<sink>``; rows
-    that still fail stay in the reprocessed deadletter. The original
-    deadletter archive is never mutated (auditable)."""
-    dl_path = f"{spec.out_dir}/{spec.deadletter}"
+    now decode are routed into the same sink layout under
+    ``{out_dir}/reprocessed``; rows that still fail stay in the
+    reprocessed deadletter. The original deadletter archive is never
+    mutated (auditable)."""
+    dl_path = sink_path(spec, spec.deadletter)
     raw_cols = ["url", "warc_ts", "html", "lang"]
     dl = spark.read.parquet(dl_path)
     raw = dl.select(*[c for c in raw_cols if c in dl.columns])
-    sub = PipelineSpec(
-        source_path=dl_path,
-        out_dir=f"{spec.out_dir}/reprocessed",
-        routes=spec.routes,
-        deadletter=spec.deadletter,
-        enrich_lang_dim=spec.enrich_lang_dim,
-        partition_cols=spec.partition_cols,
-        sink_columns=spec.sink_columns,
-        version=spec.version,
+    sub = replace(
+        spec, source_path=dl_path, out_dir=f"{spec.out_dir}/reprocessed",
+        subscription=None, input_manifest=None,
     )
     return run_pipeline(spark, sub, pages=raw, parse_udf=parse_fns.parse_lenient)
 

@@ -94,7 +94,7 @@ def get_session(
     return builder.getOrCreate()
 
 
-def widen_small_scan(df, factor: int = 1):
+def widen_small_scan(df):
     """Round-robin repartition a frame whose source delivers far fewer
     splits than the session's parallelism — the unsplittable-small-file
     case (guide §2.5 input skew: parquet cannot split inside a row
@@ -104,14 +104,19 @@ def widen_small_scan(df, factor: int = 1):
     2.77 s vs 1.28 s once widened).
 
     Scale-adaptive by construction: triggers only when the compiled
-    scan has < defaultParallelism·factor/4 partitions, so any real
-    corpus (thousands of splits) is a strict no-op and no shuffle is
-    added. The check compiles the physical plan driver-side (no job).
-    Round-robin keeps Spark's sort-before-repartition determinism.
+    scan has <= defaultParallelism/4 partitions, so any real corpus
+    (thousands of splits) is a strict no-op and no shuffle is added.
+    A frame whose executed plan is adaptive (it has an exchange) is
+    returned unchanged WITHOUT asking its partition count: the question
+    makes AQE materialise every shuffle stage below (measured: 22 jobs
+    for one dedup_spans call), and the exchange already re-partitioned
+    it. Otherwise the check compiles the physical plan driver-side (no
+    job). Round-robin keeps Spark's sort-before-repartition determinism.
     """
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * factor
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
+        if df._jdf.queryExecution().executedPlan().nodeName() == "AdaptiveSparkPlan":
+            return df
         cur = df.rdd.getNumPartitions()
     except Exception:
         return df

@@ -9,16 +9,23 @@ Mapping:
   reference's queue-drop counter analog)
 - bounded queues / backpressure→ watermarks: bounded state instead of
   bounded queues; lateness is declared, not emergent
-- multi-output fan-out         → foreachBatch: persist the micro-batch,
-  N conditional writes — same router as batch (single code path)
+- multi-output fan-out         → foreachBatch: each micro-batch runs
+  through the batch router (plans/spec.run_pipeline) into
+  ``out/ticks/<batch_id>`` — the incremental-tick layout
 - replay-safety                → dropDuplicatesWithinWatermark(url) +
-  checkpointLocation for exactly-once progress
+  checkpointLocation for exactly-once progress; a replayed micro-batch
+  finds its sinks' lineage manifests committed and skips them
 """
 
 from __future__ import annotations
 
+from dataclasses import replace
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from bmspark.plans.spec import PipelineResult, PipelineSpec, run_pipeline
 
 
 def hourly_window_counts(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -98,64 +105,39 @@ def stateful_domain_counters(stream: DataFrame, timeout_minutes: int = 120) -> D
     )
 
 
+def run_micro_batch(
+    spec: PipelineSpec, batch_df: DataFrame, batch_id: int
+) -> PipelineResult | None:
+    """The foreachBatch body: route one micro-batch with the batch router
+    into ``{spec.out_dir}/ticks/<batch_id>``. foreachBatch is
+    at-least-once; a replayed batch id plans the same spec, so its
+    committed sinks are skipped instead of appended to twice."""
+    if batch_df.isEmpty():
+        return None
+    tick = replace(spec, out_dir=f"{spec.out_dir}/ticks/{batch_id:06d}")
+    return run_pipeline(batch_df.sparkSession, tick, pages=batch_df)
+
+
 def run_streaming_pipeline(
     spark,
-    source_dir: str,
+    spec: PipelineSpec,
     schema,
-    out_dir: str,
     checkpoint_dir: str,
-    routes,
     max_files_per_trigger: int = 4,
     trigger_interval: str | None = None,
 ):
-    """T7: the full streaming pipeline — parse + route inside foreachBatch
-    (the only multi-sink mechanism in Structured Streaming). Returns the
-    started StreamingQuery; caller awaits/stops it.
-
-    foreachBatch receives a batch DataFrame + monotonic batch_id; the body
-    reuses the BATCH router verbatim — one code path for both modes, which
-    is the whole point of the Structured Streaming design."""
-    from bmspark.functions import parse as parse_fns
-
+    """T7: the full streaming pipeline — ``spec.source_path`` read as a
+    file stream, each micro-batch routed by :func:`run_micro_batch`
+    inside foreachBatch (the only multi-sink mechanism in Structured
+    Streaming). Returns the started StreamingQuery; caller awaits/stops
+    it. Sinks read back with ``incremental.read_sink_union``."""
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
+        .parquet(spec.source_path)
     )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        parsed = parse_fns.with_parsed(batch_df).select(
-            "*",
-            F.col("parsed.parse_ok").alias("parse_ok"),
-            F.col("parsed.n_links").alias("n_links"),
-        ).drop("parsed")
-        parsed = parsed.withColumn("domain", parse_fns.domain_of("url")).persist()
-        try:
-            # coalesce(pred, false): NULL-evaluating predicates route to
-            # the deadletter instead of vanishing (see plans/spec.py)
-            matched = F.lit(False)
-            for name, pred_sql in routes:
-                pred = F.coalesce(F.expr(pred_sql), F.lit(False))
-                (
-                    parsed.filter(F.coalesce(F.col("parse_ok"), F.lit(False)) & pred)
-                    .write.mode("append")
-                    .parquet(f"{out_dir}/{name}")
-                )
-                matched = matched | pred
-            (
-                parsed.filter(
-                    ~F.coalesce(F.col("parse_ok"), F.lit(False)) | ~matched
-                )
-                .write.mode("append")
-                .parquet(f"{out_dir}/deadletter")
-            )
-        finally:
-            parsed.unpersist()
-
     writer = (
-        stream.writeStream.foreachBatch(process_batch)
+        stream.writeStream.foreachBatch(partial(run_micro_batch, spec))
         .option("checkpointLocation", checkpoint_dir)
     )
     # drain mode (default): process the backlog and stop — batch-job shape,

@@ -101,12 +101,14 @@ def main(argv: list[str]) -> int:
             pipeline.subscription = args.subscription
         if args.route_mode:
             pipeline.route_mode = args.route_mode
-        routes = pipeline.routes
     elif args.source is None or args.out is None:
         ap.error("--source and --out are required when --conf is not given")
-
-    source = pipeline.source_path if args.conf_file else args.source
-    out = pipeline.out_dir if args.conf_file else args.out
+    else:
+        pipeline = spec.PipelineSpec(
+            source_path=args.source, out_dir=args.out, routes=routes,
+            route_mode=args.route_mode or "multi",
+            subscription=args.subscription,
+        )
 
     if args.streaming:
         from bmspark import fixtures
@@ -114,22 +116,14 @@ def main(argv: list[str]) -> int:
 
         q = runner.run_streaming_pipeline(
             spark,
-            source,
+            pipeline,
             fixtures.PAGES_SCHEMA,
-            out,
-            args.checkpoint or f"{out}/_checkpoint",
-            [(r.name, r.predicate) for r in routes],
+            args.checkpoint or f"{pipeline.out_dir}/_checkpoint",
             trigger_interval=args.daemon_interval,
         )
         q.awaitTermination()
         return 0
 
-    if not args.conf_file:
-        pipeline = spec.PipelineSpec(
-            source_path=source, out_dir=out, routes=routes,
-            route_mode=args.route_mode or "multi",
-            subscription=args.subscription,
-        )
     if args.incremental:
         from bmspark.plans import incremental
 

@@ -406,3 +406,25 @@ def test_incremental_span_dedup_matches_batch_and_compacts(spark, tmp_path):
         for r in idp.read_span_corpus(spark, out).collect()
     }
     assert got2 == got
+
+
+def test_null_text_emitted_once_across_ticks(spark, tmp_path):
+    """md5(NULL) is NULL and NULL never matches in the anti-join, so a
+    NULL-text doc landing in every tick used to be re-emitted every
+    tick. With a fixed fingerprint for NULL text it is emitted once —
+    and stays once after compaction folds the ticks."""
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    for tick in range(3):
+        rows = [(tick * 10, None), (tick * 10 + 1, f"fresh text {tick}")]
+        staging = str(tmp_path / f"staging{tick}")
+        spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(staging)
+        _arrive(src, staging)
+        idp.dedup_tick(spark, src, out)
+
+    def null_ids():
+        corpus = idp.read_corpus(spark, out)
+        return [r.doc_id for r in corpus.filter(F.col("text").isNull()).collect()]
+
+    assert null_ids() == [0]
+    assert idp.compact_ticks(spark, out) is not None
+    assert null_ids() == [0]

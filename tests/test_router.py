@@ -1,14 +1,35 @@
-"""Router contracts (SURVEY.md §5.2.4-5): routed-row equality, pairwise
-disjointness, exact per-sink counts, resume-from-manifest, countonly."""
+"""Router contracts for plans/spec.run_pipeline, the package's one
+fan-out (SURVEY.md §5.2.4-5): routed-row equality, pairwise
+disjointness, exact per-sink counts, resume-from-manifest, both route
+modes agreeing on partitioning and overlapping rule sets, and the Spark
+job count of one run."""
 
 from __future__ import annotations
+
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
 
 from bmspark import fixtures
-from bmspark.operators import route
 from bmspark.plans import lineage, spec
+
+#: a broadcast tap (every parsed row) next to a conditional sink: a row
+#: lands in every sink whose predicate holds, so sink_en's rows are also
+#: in tap, and only parse failures reach the deadletter
+OVERLAPPING_ROUTES = [
+    spec.RouteRule("tap", "true"),
+    spec.RouteRule("sink_en", "lang = 'en'"),
+]
+
+
+def _sink_urls(spark, res) -> dict[str, list[str]]:
+    """Sorted url list of every routed output (sinks + deadletter)."""
+    return {
+        name: sorted(r.url for r in spark.read.parquet(res.paths[name]).select("url").collect())
+        for name in res.counts
+        if name != "agg_hourly"
+    }
 
 
 @pytest.fixture(scope="module")
@@ -130,51 +151,82 @@ def test_per_sink_output_encoding(spark, tmp_path):
 
 def test_single_pass_router_equals_multi(spark, result, tmp_path):
     """route_mode='single_pass' (dynamic-partition fan-out, one write
-    job) must produce exactly the multi-action router's counts and
-    routed-row equality; deadletter rows keep raw html, others null it."""
+    job) must produce exactly the multi-action router's per-sink counts
+    and url sets — on the partitioning DEFAULT_ROUTES and on the
+    overlapping tap + sink_en set; deadletter rows keep raw html, others
+    null it."""
     _, s, res, pages = result
-    sp = spec.PipelineSpec(
-        source_path="(inline)", out_dir=str(tmp_path / "sp"),
-        routes=s.routes, route_mode="single_pass",
+    input_urls = sorted(r.url for r in pages.select("url").collect())
+    for name, routes in (("default", spec.DEFAULT_ROUTES), ("overlap", OVERLAPPING_ROUTES)):
+        multi = res if name == "default" else spec.run_pipeline(
+            spark, replace(s, out_dir=str(tmp_path / name), routes=routes), pages=pages
+        )
+        sp = replace(
+            s, out_dir=str(tmp_path / f"{name}_sp"), routes=routes, route_mode="single_pass"
+        )
+        rp = spec.run_pipeline(spark, sp, pages=pages)
+        assert rp.counts == {k: v for k, v in multi.counts.items() if k != "agg_hourly"}, name
+        assert rp.input_count == multi.input_count == 2000
+        urls = _sink_urls(spark, rp)
+        assert urls == _sink_urls(spark, multi), name
+        # every input row is routed at least once, and nothing invented
+        assert sorted({u for us in urls.values() for u in us}) == input_urls, name
+        routed = spark.read.parquet(rp.paths["routed"])
+        assert routed.count() == sum(rp.counts.values())
+        assert routed.filter(
+            (F.col("__sink") != "deadletter") & F.col("html").isNotNull()
+        ).count() == 0
+        assert routed.filter(
+            (F.col("__sink") == "deadletter") & F.col("html").isNull()
+        ).count() == 0
+        # resume: rerun returns cached counts without rewriting
+        rp2 = spec.run_pipeline(spark, sp, pages=pages)
+        assert rp2.skipped == ["routed"] and rp2.counts == rp.counts
+    # overlap: the tap takes every parsed row, sink_en a subset of them
+    assert rp.counts["tap"] + rp.counts["deadletter"] == 2000
+    assert set(urls["sink_en"]) <= set(urls["tap"])
+
+
+def test_single_pass_rejects_non_parquet_route(spark, tmp_path):
+    """single_pass writes one parquet table: a route asking for another
+    encoding is refused at plan time, before any job runs."""
+    s = spec.PipelineSpec(
+        source_path="(inline)", out_dir=str(tmp_path / "sp"), route_mode="single_pass",
+        routes=[spec.RouteRule("sink_en", "lang = 'en'", fmt="json")],
     )
-    rp = spec.run_pipeline(spark, sp, pages=pages)
-    multi_counts = {k: v for k, v in res.counts.items()
-                    if k.startswith("sink_") or k == "deadletter"}
-    assert rp.counts == multi_counts
-    assert rp.input_count == res.input_count
-    routed = spark.read.parquet(rp.paths["routed"])
-    assert routed.count() == 2000
-    assert routed.select("url").exceptAll(pages.select("url")).isEmpty()
-    assert pages.select("url").exceptAll(routed.select("url")).isEmpty()
-    assert routed.filter(
-        (F.col("__sink") != "deadletter") & F.col("html").isNotNull()
-    ).count() == 0
-    assert routed.filter(
-        (F.col("__sink") == "deadletter") & F.col("html").isNull()
-    ).count() == 0
-    # resume: rerun returns cached counts without rewriting
-    rp2 = spec.run_pipeline(spark, sp, pages=pages)
-    assert rp2.skipped == ["routed"] and rp2.counts == rp.counts
+    with pytest.raises(ValueError, match="sink_en"):
+        spec.run_pipeline(spark, s, pages=fixtures.synth_pages(spark, 10, partitions=1))
 
 
-def test_deadletter_reprocess_salvages_truncated(spark, result):
+def test_deadletter_reprocess_salvages_truncated(spark, result, tmp_path):
     """Replay the deadletter archive through the lenient decoder
     (reference pattern: re-ingest a tap archive after fixing the
-    pipeline). Truncated-markup pages (no </p>) are salvaged via
-    tag-stripping; empty and non-utf8 payloads remain deadlettered; the
-    original archive is untouched."""
+    pipeline), in both route modes. Truncated-markup pages (no </p>) are
+    salvaged via tag-stripping; empty and non-utf8 payloads remain
+    deadlettered; the original archive is untouched."""
     out, s, res, pages = result
-    dl_before = spark.read.parquet(f"{out}/deadletter").count()
-    rp = spec.reprocess_deadletter(spark, s)
-    salvaged = sum(v for k, v in rp.counts.items() if k.startswith("sink_"))
     n_truncated = len([i for i in range(2000) if i % 60 == 13])
     n_bad = len([i for i in range(2000) if i % 60 in (33, 53)])
-    assert salvaged == n_truncated
-    assert rp.counts["deadletter"] == n_bad
-    assert spark.read.parquet(f"{out}/deadletter").count() == dl_before  # untouched
-    # salvaged rows re-enter the normal sink layout with lineage manifests
-    m = lineage.read_manifest(f"{out}/reprocessed/sink_en")
-    assert m and m["row_count"] == spark.read.parquet(f"{out}/reprocessed/sink_en").count()
+    sp = replace(s, out_dir=str(tmp_path / "sp"), route_mode="single_pass")
+    spec.run_pipeline(spark, sp, pages=pages)
+    for ms in (s, sp):
+        dl_path = spec.sink_path(ms, ms.deadletter)
+        dl_before = spark.read.parquet(dl_path).count()
+        rp = spec.reprocess_deadletter(spark, ms)
+        salvaged = sum(v for k, v in rp.counts.items() if k.startswith("sink_"))
+        assert salvaged == n_truncated, ms.route_mode
+        assert rp.counts["deadletter"] == n_bad, ms.route_mode
+        assert spark.read.parquet(dl_path).count() == dl_before  # untouched
+        # salvaged rows re-enter the mode's sink layout with lineage manifests
+        n_en = spark.read.parquet(rp.paths["sink_en"]).count()
+        assert rp.paths["sink_en"] == spec.sink_path(
+            replace(ms, out_dir=f"{ms.out_dir}/reprocessed"), "sink_en"
+        )
+        if ms.route_mode == "multi":
+            assert lineage.read_manifest(rp.paths["sink_en"])["row_count"] == n_en
+        else:
+            m = lineage.read_manifest(rp.paths["routed"])
+            assert m["metrics"]["sink_counts"]["sink_en"] == n_en
 
 
 def test_subscription_filter_prunes_scan(spark, tmp_path):
@@ -197,103 +249,62 @@ def test_subscription_filter_prunes_scan(spark, tmp_path):
     assert res.input_count == want
 
 
-def test_countonly_and_broadcast_modes(spark, tmp_path):
-    """tap countonly=true (count, no rows) + broadcast tap (ALL rows —
-    the reference's native every-output-sees-everything semantics)."""
-    pages = fixtures.synth_pages(spark, 500, partitions=4)
-    sinks = [
-        route.SinkSpec("all_tap", mode="broadcast", path=str(tmp_path / "tap")),
-        route.SinkSpec("just_count", predicate=F.lit(True), mode="countonly"),
-        route.SinkSpec("en", predicate=F.col("lang") == "en", path=str(tmp_path / "en")),
-    ]
-    res = route.route(
-        pages, sinks,
-        deadletter_path=str(tmp_path / "dl"),
-        extra_deadletter_pred=F.col("text").isNull(),
-    )
-    n_malformed = 500 // 20
-    assert res.counts["all_tap"] == 500  # broadcast sees everything
-    assert res.counts["just_count"] == 500 - n_malformed  # routable rows only
-    assert res.counts["en"] == spark.read.parquet(str(tmp_path / "en")).count()
-    assert res.counts["deadletter"] == spark.read.parquet(str(tmp_path / "dl")).count()
-    # conditional sinks + deadletter partition the input
-    assert res.counts["en"] + res.counts["deadletter"] == 500
-
-
 def test_null_predicate_rows_fall_to_deadletter(spark, tmp_path):
     """Regression (round-2 advice): a predicate like `lang = 'en'`
     evaluates NULL for NULL lang; such rows must land in the deadletter —
-    not vanish from every sink — in BOTH router modes."""
+    not vanish from every output — in BOTH router modes, which agree on
+    per-sink counts and url sets, for the partitioning DEFAULT_ROUTES and
+    the overlapping tap + sink_en set."""
     pages = fixtures.synth_pages(spark, 400, partitions=4).withColumn(
         "lang",
         F.when(F.crc32("url") % 7 == 0, F.lit(None).cast("string")).otherwise(
             F.col("lang")
         ),
     )
-    n_null = pages.filter(F.col("lang").isNull()).count()
-    assert n_null > 0  # the scenario is actually exercised
+    null_urls = {r.url for r in pages.filter(F.col("lang").isNull()).collect()}
+    assert null_urls  # the scenario is actually exercised
+    input_urls = sorted(r.url for r in pages.select("url").collect())
 
-    for mode in ("multi", "single_pass"):
-        out = str(tmp_path / mode)
-        s = spec.PipelineSpec(
-            source_path="(inline)",
-            out_dir=out,
-            routes=spec.DEFAULT_ROUTES,
-            route_mode=mode,
-        )
-        res = spec.run_pipeline(spark, s, pages=pages)
-        routed = sum(
-            v for k, v in res.counts.items()
-            if k.startswith("sink_") or k == "deadletter"
-        )
-        assert routed == res.input_count == 400, mode
-        # equality: union of sinks == input, exactly
-        paths = {
-            k: v for k, v in res.paths.items()
-            if k.startswith("sink_") or k == "deadletter"
-        }
-        union = None
-        for p in paths.values():
-            part = spark.read.parquet(p).select("url")
-            union = part if union is None else union.unionByName(part)
-        assert pages.select("url").exceptAll(union).isEmpty(), mode
-        assert union.exceptAll(pages.select("url")).isEmpty(), mode
+    for name, routes in (("default", spec.DEFAULT_ROUTES), ("overlap", OVERLAPPING_ROUTES)):
+        by_mode = {}
+        for mode in ("multi", "single_pass"):
+            s = spec.PipelineSpec(
+                source_path="(inline)",
+                out_dir=str(tmp_path / f"{name}_{mode}"),
+                routes=routes,
+                route_mode=mode,
+            )
+            res = spec.run_pipeline(spark, s, pages=pages)
+            assert res.input_count == 400, (name, mode)
+            urls = _sink_urls(spark, res)
+            # no row vanishes, none is invented
+            assert sorted({u for us in urls.values() for u in us}) == input_urls, (name, mode)
+            assert not null_urls & set(urls["sink_en"]), (name, mode)
+            by_mode[mode] = ({k: res.counts[k] for k in urls}, urls)
+        assert by_mode["multi"] == by_mode["single_pass"], name
+        if name == "default":  # partitioning rules: every row exactly once
+            counts, urls = by_mode["multi"]
+            assert sum(counts.values()) == 400
+            assert null_urls <= set(urls["deadletter"])
 
 
-def test_null_predicate_operator_route(spark, tmp_path):
-    """Same NULL-predicate contract for the standalone route() operator."""
-    pages = fixtures.synth_pages(spark, 300, partitions=3).withColumn(
-        "lang",
-        F.when(F.crc32("url") % 5 == 0, F.lit(None).cast("string")).otherwise(
-            F.col("lang")
-        ),
+@pytest.mark.parametrize("mode, n_jobs", [("multi", 9), ("single_pass", 2)])
+def test_run_pipeline_job_count(spark, tmp_path, mode, n_jobs):
+    """Pins the Spark jobs one run_pipeline call submits on 400 pages,
+    counted through the caller's job group (multi's sink-write threads
+    inherit it). A router edit that adds a pass fails here; lower the
+    pin when one goes away."""
+    pages = fixtures.synth_pages(spark, 400, partitions=4)
+    s = spec.PipelineSpec(
+        source_path="(inline)", out_dir=str(tmp_path / mode),
+        routes=spec.DEFAULT_ROUTES, route_mode=mode,
     )
-    sinks = [
-        route.SinkSpec("en", predicate=F.col("lang") == "en", path=str(tmp_path / "en")),
-        route.SinkSpec(
-            "rest", predicate=F.col("lang") != "en", path=str(tmp_path / "rest")
-        ),
-    ]
-    res = route.route(pages, sinks, deadletter_path=str(tmp_path / "dl"))
-    assert res.counts["en"] + res.counts["rest"] + res.counts["deadletter"] == 300
-    checks = route.check_routed_equality(spark, pages, res, ["url"])
-    assert all(checks.values()), checks
-
-
-def test_check_routed_equality_excludes_broadcast(spark, tmp_path):
-    """Regression (round-2 advice): broadcast sinks receive ALL rows by
-    design; check_routed_equality must exclude them or every check
-    false-fails."""
-    pages = fixtures.synth_pages(spark, 200, partitions=2)
-    sinks = [
-        route.SinkSpec("tap", mode="broadcast", path=str(tmp_path / "tap")),
-        route.SinkSpec("en", predicate=F.col("lang") == "en", path=str(tmp_path / "en")),
-        route.SinkSpec(
-            "not_en", predicate=F.col("lang") != "en", path=str(tmp_path / "ne")
-        ),
-    ]
-    res = route.route(pages, sinks, deadletter_path=str(tmp_path / "dl"))
-    assert res.modes["tap"] == "broadcast"
-    checks = route.check_routed_equality(spark, pages, res, ["url"])
-    assert all(checks.values()), checks
-    assert not any("tap" in k for k in checks)  # broadcast sink not compared
+    sc = spark.sparkContext
+    group = f"router_jobs_{mode}_{tmp_path.name}"
+    sc.setJobGroup(group, "run_pipeline job count")
+    try:
+        spec.run_pipeline(spark, s, pages=pages)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == n_jobs

@@ -1,7 +1,8 @@
-"""Streaming DAG tests (SURVEY.md §2.8): the streaming router must
-produce byte-identical sink contents to the batch router on the same
-input (one code path, two execution modes), and windowed/stateful shapes
-must run with watermarks + checkpoints."""
+"""Streaming DAG tests (SURVEY.md §2.8): each micro-batch runs through
+the batch router (plans/spec.run_pipeline) into ``ticks/<batch_id>``, so
+the union of micro-batch sinks must equal the batch routing of the same
+input, and a replayed batch must not duplicate rows; windowed/stateful
+shapes must run with watermarks + checkpoints."""
 
 from __future__ import annotations
 
@@ -9,13 +10,23 @@ import pytest
 from pyspark.sql import functions as F
 
 from bmspark import fixtures
+from bmspark.plans import incremental, spec
 from bmspark.streaming import runner
 
-ROUTES = [
-    ("sink_en", "lang = 'en'"),
-    ("sink_romance", "lang IN ('fr','es')"),
-    ("sink_other", "lang NOT IN ('en','fr','es')"),
-]
+SINKS = ["sink_en", "sink_romance", "sink_other", "deadletter"]
+
+
+def _spec(src: str, out: str) -> spec.PipelineSpec:
+    return spec.PipelineSpec(source_path=src, out_dir=out, routes=spec.DEFAULT_ROUTES)
+
+
+def _urls(spark, s: spec.PipelineSpec):
+    """url column of every micro-batch's sinks + deadletter, unioned."""
+    union = None
+    for name in SINKS:
+        part = incremental.read_sink_union(spark, s, name).select("url")
+        union = part if union is None else union.unionByName(part)
+    return union
 
 
 @pytest.fixture(scope="module")
@@ -32,8 +43,9 @@ def test_stream_router_equals_batch_router(spark, staged_pages, tmp_path_factory
     src, pages = staged_pages
     out = str(tmp_path_factory.mktemp("stream_out"))
     ckpt = str(tmp_path_factory.mktemp("ckpt"))
+    s = _spec(src, out)
     q = runner.run_streaming_pipeline(
-        spark, src, fixtures.PAGES_SCHEMA, out, ckpt, ROUTES, max_files_per_trigger=3
+        spark, s, fixtures.PAGES_SCHEMA, ckpt, max_files_per_trigger=3
     )
     q.awaitTermination(120)
 
@@ -42,17 +54,14 @@ def test_stream_router_equals_batch_router(spark, staged_pages, tmp_path_factory
     parsed = parse_fns.with_parsed(pages).select(
         "url", "lang", F.col("parsed.parse_ok").alias("parse_ok")
     )
-    for name, pred in ROUTES:
-        want = parsed.filter(F.col("parse_ok") & F.expr(pred)).count()
-        got = spark.read.parquet(f"{out}/{name}").count()
-        assert got == want, name
+    for rule in s.routes:
+        want = parsed.filter(F.col("parse_ok") & F.expr(rule.predicate)).count()
+        got = incremental.read_sink_union(spark, s, rule.name).count()
+        assert got == want, rule.name
     want_dl = parsed.filter(~F.col("parse_ok")).count()
-    assert spark.read.parquet(f"{out}/deadletter").count() == want_dl
+    assert incremental.read_sink_union(spark, s, "deadletter").count() == want_dl
     # routed-row equality across modes
-    union = None
-    for name in [r[0] for r in ROUTES] + ["deadletter"]:
-        part = spark.read.parquet(f"{out}/{name}").select("url")
-        union = part if union is None else union.unionByName(part)
+    union = _urls(spark, s)
     assert union.exceptAll(pages.select("url")).isEmpty()
     assert pages.select("url").exceptAll(union).isEmpty()
 
@@ -63,16 +72,33 @@ def test_stream_checkpoint_resume_no_reprocess(spark, staged_pages, tmp_path_fac
     src, pages = staged_pages
     out = str(tmp_path_factory.mktemp("resume_out"))
     ckpt = str(tmp_path_factory.mktemp("resume_ckpt"))
-    q1 = runner.run_streaming_pipeline(
-        spark, src, fixtures.PAGES_SCHEMA, out, ckpt, ROUTES
-    )
+    s = _spec(src, out)
+    q1 = runner.run_streaming_pipeline(spark, s, fixtures.PAGES_SCHEMA, ckpt)
     q1.awaitTermination(120)
-    n1 = spark.read.parquet(f"{out}/sink_en").count()
-    q2 = runner.run_streaming_pipeline(
-        spark, src, fixtures.PAGES_SCHEMA, out, ckpt, ROUTES
-    )
+    n1 = incremental.read_sink_union(spark, s, "sink_en").count()
+    q2 = runner.run_streaming_pipeline(spark, s, fixtures.PAGES_SCHEMA, ckpt)
     q2.awaitTermination(120)
-    assert spark.read.parquet(f"{out}/sink_en").count() == n1
+    assert incremental.read_sink_union(spark, s, "sink_en").count() == n1
+
+
+def test_replayed_micro_batch_leaves_sinks_unchanged(spark, staged_pages, tmp_path):
+    """foreachBatch is at-least-once: running the micro-batch body twice
+    with the same batch id must leave every sink's row count unchanged
+    (the replay finds the batch's lineage manifests and skips)."""
+    src, _ = staged_pages
+    s = _spec(src, str(tmp_path / "replay"))
+    batch = spark.read.parquet(src)
+
+    def counts():
+        return {n: incremental.read_sink_union(spark, s, n).count() for n in SINKS}
+
+    first = runner.run_micro_batch(s, batch, 7)
+    before = counts()
+    assert before == {n: first.counts[n] for n in SINKS}
+    assert sum(before.values()) == 800
+    again = runner.run_micro_batch(s, batch, 7)
+    assert counts() == before
+    assert set(SINKS) <= set(again.skipped)
 
 
 def test_windowed_counts_stream_equals_batch(spark, staged_pages, tmp_path_factory):
@@ -234,8 +260,9 @@ def test_daemon_mode_processing_time_trigger(spark, staged_pages, tmp_path_facto
     src, pages = staged_pages
     out = str(tmp_path_factory.mktemp("daemon_out"))
     ckpt = str(tmp_path_factory.mktemp("daemon_ckpt"))
+    s = _spec(src, out)
     q = runner.run_streaming_pipeline(
-        spark, src, fixtures.PAGES_SCHEMA, out, ckpt, ROUTES,
+        spark, s, fixtures.PAGES_SCHEMA, ckpt,
         max_files_per_trigger=4, trigger_interval="1 seconds",
     )
     try:
@@ -254,9 +281,6 @@ def test_daemon_mode_processing_time_trigger(spark, staged_pages, tmp_path_facto
     finally:
         q.stop()
         q.awaitTermination(30)
-    union = None
-    for name in [r[0] for r in ROUTES] + ["deadletter"]:
-        part = spark.read.parquet(f"{out}/{name}").select("url")
-        union = part if union is None else union.unionByName(part)
+    union = _urls(spark, s)
     assert union.count() == 800
     assert pages.select("url").exceptAll(union).isEmpty()
